@@ -15,7 +15,13 @@ the reference repo's observable behavior (cited file:line in docstrings).
 
 __version__ = "0.2.0"
 
+from katta_spark import _zipcache
 from katta_spark.scoring import BM25_B, BM25_K1  # noqa: F401
+
+# Every kernel closure imports katta_spark inside the Python worker, so
+# this is where a reused worker stops re-reading pyspark.zip and the
+# spark-core jar before each task (see _zipcache).
+_zipcache.install()
 
 
 def __getattr__(name):

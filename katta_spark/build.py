@@ -648,10 +648,11 @@ def build_index(
             # job re-executes the tokenize lineage. The kernel lexsorts in
             # numpy (measured ~2x cheaper than the JVM sortWithinPartitions it
             # replaces) and encodes. The second, postings-sized hash exchange
-            # groups each shard into one task so the write is ONE th-sorted
-            # file per shard — parquet min/max row-group skipping on th, file
-            # count O(num_shards); hash (not range) so nothing is sampled and
-            # the kernel runs exactly once.
+            # spreads each shard's (shard_id, th % 16) slices over the
+            # batch's len(shard_ids) tasks, so a shard is written as up to
+            # min(16, len(shard_ids)) files, each th-sorted — parquet min/max
+            # row-group skipping on th still holds; hash (not range) so
+            # nothing is sampled and the kernel runs exactly once.
             n_encode_parts = encode_partitions or int(
                 spark.conf.get("spark.sql.shuffle.partitions")
             )
@@ -666,7 +667,7 @@ def build_index(
                 # shard ids into as many partitions collides (Poisson max
                 # bucket 2-3x mean = a write-stage straggler, measured ~20%);
                 # files stay th-sorted so row-group min/max skipping holds,
-                # ≤16 files per shard.
+                # ≤ min(16, len(shard_ids)) files per shard.
                 .repartition(
                     len(shard_ids), F.col("shard_id"), F.pmod(F.col("th"), F.lit(16))
                 )

@@ -121,9 +121,12 @@ def bm25_topk(
     else:
         order = [F.col("score").desc(), F.col("doc_id").asc()]
         cols = ["doc_id", "score"]
+    # at most one row per doc: a k past n_docs returns nothing more, but
+    # TakeOrderedAndProject would still size its heaps by k (an "all hits"
+    # k=10**9 took ~8 GB of JVM heap for a 2k-doc corpus)
     return (
         scored.withColumn("score", F.col("score_d").cast(score_dtype))
         .select(*cols)
         .orderBy(*order)
-        .limit(k)
+        .limit(min(k, n_docs))
     )

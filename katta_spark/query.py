@@ -218,7 +218,16 @@ class IndexHandle:
         # tombstones are deliberately NOT part of the handle state and
         # stay checked per call.
         corpus_path = os.path.join(index_dir, "corpus.parquet")
-        key = (os.path.realpath(index_dir), os.stat(corpus_path).st_mtime_ns)
+        try:
+            corpus_mtime = os.stat(corpus_path).st_mtime_ns
+        except FileNotFoundError as e:
+            # FORMAT_VERSION is written at build start and corpus.parquet
+            # last, so this is a build that never finished
+            raise ValueError(
+                f"index at {index_dir!r} is an incomplete build (no "
+                "corpus.parquet); re-run build_index to resume"
+            ) from e
+        key = (os.path.realpath(index_dir), corpus_mtime)
         cached = _OPEN_HANDLE_CACHE.get(key)
         if cached is not None:
             # qpm() is "queries per minute since the handle was opened":

@@ -37,7 +37,14 @@ _REL_CACHE: dict = {}
 
 def _ann_rel(spark: SparkSession, path: str) -> DataFrame:
     key = (path, spark)
-    mt = os.stat(path).st_mtime_ns
+    try:
+        mt = os.stat(path).st_mtime_ns
+    except FileNotFoundError as e:
+        raise FileNotFoundError(
+            f"vector index at {os.path.dirname(path)!r} has no "
+            f"{os.path.basename(path)} sidecar; rebuild it "
+            "(build_ann_index / build_ivf_index)"
+        ) from e
     hit = _REL_CACHE.get(key)
     if hit is not None and hit[0] == mt:
         return hit[1]

@@ -183,3 +183,22 @@ def test_open_refuses_unknown_format(spark, index, tmp_path_factory):
     os.remove(os.path.join(d, "FORMAT_VERSION"))
     with pytest.raises(ValueError, match="unknown.*rebuild"):
         IndexHandle.open(spark, d)
+
+
+def test_open_incomplete_build_says_resume(
+    spark, index, tiny_transcripts, tmp_path_factory
+):
+    """A build interrupted before its last write (corpus.parquet) passes
+    the FORMAT_VERSION check, which is written at build start; open names
+    the cause instead of a bare FileNotFoundError, and the advised re-run
+    resumes into an openable index."""
+    import shutil
+
+    d = str(tmp_path_factory.mktemp("idx_partial")) + "/idx"
+    shutil.copytree(index.index_dir, d)
+    shutil.rmtree(os.path.join(d, "corpus.parquet"))
+    with pytest.raises(ValueError, match="incomplete build.*re-run build_index"):
+        IndexHandle.open(spark, d)
+    s = build_index(spark, tiny_transcripts, d, num_shards=4, block=32)
+    assert s["batches_committed"] == 0
+    assert IndexHandle.open(spark, d).n_docs == index.n_docs

@@ -276,3 +276,20 @@ def test_mmr_rerank(spark):
         mmr_rerank(spark, cands, emb, 0, lam=1.5)
     with pytest.raises(ValueError, match="not found"):
         mmr_rerank(spark, cands, emb, 777)
+
+
+def test_ann_missing_sidecar_names_index(spark, tmp_path):
+    """A vector index whose vectors.parquet sidecar is gone fails with an
+    error naming the index directory and the sidecar, not a bare stat
+    error."""
+    import json
+    import re
+
+    from katta_spark.similarity import ann_topk
+
+    d = tmp_path / "ann"
+    d.mkdir()
+    (d / "ANN_META.json").write_text(json.dumps({"dim": 4, "planes": 2, "seed": 7}))
+    pattern = f"index at '{re.escape(str(d))}' has no vectors.parquet sidecar"
+    with pytest.raises(FileNotFoundError, match=pattern):
+        ann_topk(spark, str(d), [1.0, 0.0, 0.0, 0.0], k=1)
